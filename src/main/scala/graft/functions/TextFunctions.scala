@@ -202,41 +202,27 @@ object TextFunctions {
   /** Word n-gram array (space-joined); documents shorter than n words
     * yield an empty array. The shared gram builder for the repetition
     * stats here and the shingle stage of [[graft.operators.Dedup]].
+    * `sep = ""` selects CHARACTER n-grams ([[charNgramArray]]). Null
+    * text yields null for word unigrams and an empty array otherwise.
+    *
+    * One native pass per document
+    * ([[org.apache.spark.sql.graft.NgramArray]]), byte-identical to the
+    * `split` + `transform(sequence, slice + array_join)` tree it
+    * replaced — the form the oracle SQL mirrors, kept in the test
+    * sources as the differential reference.
     */
-  def ngramArray(text: Column, n: Int, sep: String = " "): Column = {
-    // sep = "" selects CHARACTER n-grams (CJK and other unsegmented
-    // scripts have no token separator to split on) — substr-based, not
-    // an empty-regex split: Java split keeps a trailing empty string
-    // under Spark's limit=-1 where other engines drop it, so the split
-    // form would not replay cross-engine
-    if (sep.isEmpty) charNgramArray(text, n)
-    else {
-      val w = split(text, java.util.regex.Pattern.quote(sep))
-      if (n == 1) w
-      else
-        // the descending sequence(0, size-n) on a short doc would
-        // evaluate slice(start=0) and throw — guard with an empty array
-        when(F.size(w) >= n,
-          F.transform(F.sequence(lit(0), F.size(w) - n),
-            i => array_join(F.slice(w, i + lit(1), lit(n)), sep)))
-          .otherwise(array())
-    }
-  }
+  def ngramArray(text: Column, n: Int, sep: String = " "): Column =
+    org.apache.spark.sql.graft.StringExpressions.ngramArray(text, n, sep)
 
   /** Character n-gram array — the shingle unit for unsegmented
     * scripts (CJK text has no whitespace tokens to shingle on; the
-    * standard near-dup recipe there is character 3–5-grams). Sliding
-    * `substr` windows, so any engine's character-indexed substring
-    * replays it; texts shorter than n characters yield an empty
-    * array. Reached from the whole dedup family via `sep = ""`.
+    * standard near-dup recipe there is character 3–5-grams). The
+    * sliding `substr` windows, counted in code points, so any engine's
+    * character-indexed substring replays it; texts shorter than n
+    * characters (and null texts) yield an empty array. Reached from
+    * the whole dedup family via `sep = ""`.
     */
-  def charNgramArray(text: Column, n: Int): Column = {
-    require(n >= 1, s"char n-gram width must be >= 1, got $n")
-    when(length(text) >= n,
-      F.transform(F.sequence(lit(0), length(text) - n),
-        i => text.substr(i + lit(1), lit(n))))
-      .otherwise(array().cast("array<string>"))
-  }
+  def charNgramArray(text: Column, n: Int): Column = ngramArray(text, n, "")
 
   private def segments(text: Column, sep: String): Column =
     split(text, java.util.regex.Pattern.quote(sep))

@@ -382,31 +382,23 @@ object Dedup {
     * Documents with no shingles (shorter than n words) get an
     * all-null signature — filter or handle explicitly downstream.
     *
-    * The intermediate base-hash array is materialized in its own
-    * projection so the k per-coefficient folds share ONE hash pass
-    * (CollapseProject keeps a multiply-referenced non-trivial alias
-    * out of line rather than inlining it k times).
+    * The base hashes feed ONE native k-min fold
+    * ([[org.apache.spark.sql.graft.MinHashFold]]) behind the
+    * [[org.apache.spark.sql.graft.OncePerRow]] barrier: downstream
+    * consumers of `out` (the band explode, the non-empty filter) read
+    * the projected value instead of re-running the fold per use.
     */
   def withMinHashSignature(df: DataFrame, text: Column, out: String = "sig",
       n: Int = 2, k: Int = 64, seed: Long = 42L,
       baseHash: Column => Column = xxhash64(_), sep: String = " "): DataFrame = {
     val p = graft.functions.PortableHash.P
-    val coeffs = minHashCoeffs(k, seed)
     require(!df.columns.contains(out),
       s"output column '$out' already exists on the input — pick another " +
         "`out` name (silently replacing a caller's column is never right)")
-    // collision-free temp name: the input may legitimately carry
-    // __graft_xs (e.g. a frame round-tripped through another graft op)
-    val xs = Iterator.from(0)
-      .map(i => if (i == 0) "__graft_xs" else s"__graft_xs$i")
-      .find(n => !df.columns.contains(n)).get
-    df.withColumn(xs,
-        F.transform(shingleArray(text, n, sep), s => pmod(baseHash(s), lit(p))))
-      .withColumn(out, F.array(coeffs.map { case (a, b) =>
-        array_min(F.transform(col(xs),
-          x => pmod(x * lit(a) + lit(b), lit(p))))
-      }: _*))
-      .drop(xs)
+    val xs = F.transform(shingleArray(text, n, sep), s => pmod(baseHash(s), lit(p)))
+    df.withColumn(out, org.apache.spark.sql.graft.VectorExpressions.oncePerRow(
+      org.apache.spark.sql.graft.FoldExpressions.minHashFold(
+        xs, minHashCoeffs(k, seed), p)))
   }
 
   /** Near-dup SUPPRESSION (a keep/drop verdict per document) rather
@@ -418,19 +410,22 @@ object Dedup {
     * near-dups of a SUPPRESSED document may also be suppressed
     * (transitive chains — the standard greedy bucket-claim behavior).
     *
+    * `id` must be unique per row, as for [[minHashKeepStream]] and the
+    * DuckDB replay. Rows sharing an id are not merged into one
+    * document: each row claims its own buckets, and the id's verdict
+    * counts the bands lost over all of its rows.
+    *
     * Returns (doc_id, lost_bands, kept), one row per document with at
-    * least one shingle. All stages are bounded aggregations/joins on
-    * the (band, bucket) key — no pair materialization at all. Cost
-    * regime (measured head-to-head vs [[minHashPairs]] + anti-join,
-    * the Bench `dedup_minhash_keep*` rows): at gate-scale duplicate
-    * density the two forms are within ~35% of each other either way —
-    * the claim/verdict aggregations roughly buy back what skipping
-    * pair materialization saves. The keep form's structural advantage
-    * is that its volume NEVER exceeds docs × bands regardless of
-    * duplicate density, while the pairs form materializes O(dup pairs)
-    * rows — quadratic per duplicate cluster — so it is the safe
-    * default for dup-heavy corpora, and the only form with a
-    * streaming twin.
+    * least one shingle. Signatures come from [[withMinHashSignature]]
+    * on a projection that carries doc_id and ord on the row, so the
+    * only shuffles are the claim aggregation on (band, bucket) — a
+    * window aggregate read back onto each claiming row — and the
+    * verdict aggregation on doc_id. Both are bounded by docs × bands
+    * regardless of duplicate density, with no shingle rows and no pair
+    * materialization at all. [[minHashPairs]] + anti-join materializes
+    * O(dup pairs) rows instead — quadratic per duplicate cluster — so
+    * this is the safe default for dup-heavy corpora, and the only form
+    * with a streaming twin.
     */
   def minHashKeep(df: DataFrame, id: Column, text: Column, ord: Column,
       n: Int = 2, k: Int = 64, bands: Int = 16, seed: Long = 42L,
@@ -438,21 +433,23 @@ object Dedup {
       sep: String = " "): DataFrame = {
     require(bands >= 1 && bands <= k,
       s"bands must be in [1, k=$k], got $bands")
-    val sigs = minHashSignatures(shingles(df, id, text, n, sep), k, seed, baseHash)
-    val ords = df.select(id.as("doc_id"), ord.as("__ord"))
-    // NOT materialized (round-14, measured): the claim aggregation and
-    // the verdict join both hash-partition this table by (band,
-    // bucket), so exchange reuse already computes the signature
-    // pipeline once and shares the one exchange — a localCheckpoint
-    // here replaced that shared exchange with a materialization plus
-    // TWO exchanges and read 2.8× slower on the dedup_minhash_keep row
-    val withOrd = bandBuckets(sigs, bands).join(ords, "doc_id")
-    val claims = withOrd.groupBy("band", "bucket")
-      .agg(F.min(struct(col("__ord"), col("doc_id"))).as("__c"))
-      .select(col("band"), col("bucket"),
-        col("__c").getField("doc_id").as("__claimant"))
-    withOrd.join(claims, Seq("band", "bucket"))
-      .groupBy("doc_id")
+    val sigs = withMinHashSignature(
+        df.select(id.as("doc_id"), ord.as("__ord"), text.as("__graft_t")),
+        col("__graft_t"), "sig", n, k, seed, baseHash, sep)
+      .drop("__graft_t")
+      // no shingles: all-null signature, no claims (the document has
+      // no band to claim and gets no verdict row)
+      .filter(col("sig").getItem(0).isNotNull)
+    // each (band, bucket)'s claimant is the min (ord, doc_id) over its
+    // partition, read back onto every claiming row: one exchange on
+    // (band, bucket), so the signature projection runs once per row (a
+    // claims groupBy joined back reads the rows through two different
+    // exchanges and runs it twice)
+    val claims = bandBuckets(sigs, bands)
+      .select(col("doc_id"), F.min(struct(col("__ord"), col("doc_id")))
+        .over(Window.partitionBy("band", "bucket"))
+        .getField("doc_id").as("__claimant"))
+    claims.groupBy("doc_id")
       .agg(F.count(when(col("__claimant") =!= col("doc_id"), lit(1)))
         .as("lost_bands"))
       .select(col("doc_id"), col("lost_bands"),
@@ -1043,10 +1040,8 @@ object Dedup {
           // emits a row for them
           .filter(F.size(col("sig")) > 0 && col("sig").getItem(0).isNotNull)
       // persisted like minHashPairs' signature table: each side's
-      // k-element signature expression feeds BOTH the band explode
-      // (which would otherwise collapse the projection and re-evaluate
-      // the signature once PER BAND) and the verification re-join —
-      // uncached this op measured ~bands× slower than the exact screen
+      // signature feeds BOTH the band explode and the verification
+      // re-join, two consumers that would otherwise each recompute it
       if (cacheSignatures)
         sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sig

@@ -131,9 +131,10 @@ object Pq {
       .select(id.as("nid"), vec.as("nv"))
     val seeds = c.orderBy(seedHash(col("nid")), col("nid"))
       .limit(ksub)
-      .select(col("nv"))
+      // float and double vectors alike (float -> double is exact)
+      .select(col("nv").cast("array<double>"))
       .collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq)
+      .map(_.getSeq[Double](0))
     require(seeds.length == ksub,
       s"need at least ksub=$ksub valid rows to seed, got ${seeds.length}")
     var books: Seq[Seq[(Int, Seq[Double])]] = (0 until m).map { j =>

@@ -5,26 +5,30 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native per-key sequential folds for the window-family operators
-  * whose recurrences cannot be expressed as Spark windows (ewm).
+/** Native folds over one row's array: the per-key sequential folds of
+  * the window-family operators whose recurrences cannot be expressed
+  * as Spark windows (ewm), and the MinHash signature fold of the dedup
+  * family.
   *
-  * The declarative formulation (`aggregate` over the collected row
-  * array, appending each output with `concat(outs, array(y))`) is
-  * semantically exact but costs O(n²) per key — every step copies the
-  * accumulated output array — and runs interpreted lambda calls per
-  * element. These expressions produce the SAME values in one O(n)
-  * pass: the state recurrence below is the declarative fold's
-  * arithmetic operation-for-operation (each IEEE `+ − × ÷` in the
-  * same order on the same operands), so results are bit-identical and
-  * the DuckDB oracle replay ([[graft.operators.Ewm.meanSql]]) is
-  * unchanged. RollingSpec's pandas bit-for-bit fixture pins (all four
-  * adjust × ignore_na combos) and the ewm oracle gates exercise the
-  * fold; DifferentialSpec pins the var fold against the retired
-  * declarative formulation.
+  * Each replaces a declarative formulation that runs interpreted
+  * lambda calls per element. For ewm that form (`aggregate` over the
+  * collected row array, appending each output with
+  * `concat(outs, array(y))`) also costs O(n²) per key — every step
+  * copies the accumulated output array. These expressions produce the
+  * SAME values in one O(n) pass: the ewm state recurrence below is the
+  * declarative fold's arithmetic operation-for-operation (each IEEE
+  * `+ − × ÷` in the same order on the same operands), so results are
+  * bit-identical and the DuckDB oracle replay
+  * ([[graft.operators.Ewm.meanSql]]) is unchanged. RollingSpec's
+  * pandas bit-for-bit fixture pins (all four adjust × ignore_na
+  * combos) and the ewm oracle gates exercise the fold; DifferentialSpec
+  * pins the var fold against the retired declarative formulation.
   */
 
 /** pandas-parity exponentially weighted mean over one key's sorted
@@ -232,6 +236,72 @@ case class EwmVarFold(child: Expression, alpha: Double, adjust: Boolean,
     copy(child = newChild)
 }
 
+/** MinHash signature of one document: input `array<long>` of base
+  * shingle hashes x, each already reduced into [0, p); output the
+  * `k = a.length` element `array<long>` whose element j is
+  * `min_x ((x·a_j + b_j) mod p)` over the non-null x. An empty, null
+  * or all-null input yields k nulls — exactly the retired form, one
+  * `array_min(transform(xs, x -> pmod(x·a_j + b_j, p)))` lambda per
+  * coefficient (kept in the test sources; PipelineSpec and
+  * CorpusSpec pin the two bit-equal under both base hashes). With x, a
+  * and b below p = 2^31−1 the product stays under 2^62, so the long
+  * arithmetic is the lambda's, exactly. One loop over the hashes per
+  * row instead of k interpreted lambda passes.
+  */
+case class MinHashFold(child: Expression, a: Seq[Long], b: Seq[Long], p: Long)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with ExpectsInputTypes {
+  require(a.length == b.length, s"need one b per a, got ${a.length} and ${b.length}")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "minhash_fold"
+
+  @transient private lazy val aArr: Array[Long] = a.toArray
+  @transient private lazy val bArr: Array[Long] = b.toArray
+
+  /** Shared by eval and the generated code (called via reference). */
+  def fold(xs: ArrayData): ArrayData = {
+    val k = aArr.length
+    val n = if (xs == null) 0 else xs.numElements()
+    val mins = new Array[Long](k)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    var seen = false
+    var i = 0
+    while (i < n) {
+      if (!xs.isNullAt(i)) {
+        seen = true
+        val x = xs.getLong(i)
+        var j = 0
+        while (j < k) {
+          val h = ((x * aArr(j) + bArr(j)) % p + p) % p
+          if (h < mins(j)) mins(j) = h
+          j += 1
+        }
+      }
+      i += 1
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(mins)
+    else new GenericArrayData(new Array[Any](k))
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    fold(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("minHashFold", this, classOf[MinHashFold].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = $self.fold(${c.isNull} ? null : ${c.value});
+    """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashFold =
+    copy(child = newChild)
+}
+
 /** Column-level entry points for the fold expressions. */
 object FoldExpressions {
   import org.apache.spark.sql.classic.ExpressionUtils
@@ -245,4 +315,8 @@ object FoldExpressions {
       ignoreNa: Boolean, bias: Boolean, minPeriods: Int): Column =
     ExpressionUtils.column(EwmVarFold(ExpressionUtils.expression(rows),
       alpha, adjust, ignoreNa, bias, minPeriods))
+
+  def minHashFold(baseHashes: Column, coeffs: Seq[(Long, Long)], p: Long): Column =
+    ExpressionUtils.column(MinHashFold(ExpressionUtils.expression(baseHashes),
+      coeffs.map(_._1), coeffs.map(_._2), p))
 }

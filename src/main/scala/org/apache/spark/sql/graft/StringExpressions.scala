@@ -6,9 +6,10 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -439,6 +440,126 @@ case class NormalizeForDedup(child: Expression)
       newChild: Expression): NormalizeForDedup = copy(child = newChild)
 }
 
+/** Shared kernel for [[NgramArray]]. Reproduces the expression tree
+  * that built the dedup family's shingles (`ngramArray` /
+  * `charNgramArray`, kept in the test sources as the differential
+  * reference) in one pass over the string:
+  *
+  *  - word grams (`sep` non-empty): tokens are Spark's
+  *    `split(text, Pattern.quote(sep))` — `UTF8String.split` with limit
+  *    −1, i.e. Java `String.split` of the decoded text, so leading,
+  *    interior and trailing empty tokens are kept and empty text is one
+  *    empty token. A quoted literal matches exactly where `indexOf`
+  *    does (leftmost, non-overlapping), and the n tokens starting at
+  *    token i joined by `sep` ARE the source substring from token i's
+  *    start to token i+n−1's end, so every gram is one substring — no
+  *    token array, slice or join. `n = 1` yields the tokens;
+  *    documents with fewer than n tokens yield an empty array.
+  *  - character grams (`sep` empty): the `substr(i + 1, n)` windows
+  *    for i in [0, length − n], counted in code points the way
+  *    `length`/`substr` count them (`UTF8String.numBytesForFirstByte`
+  *    steps over the raw bytes, so invalid UTF-8 windows the same);
+  *    texts shorter than n code points yield an empty array.
+  *
+  * `sep` must already be the `UTF8String` round-trip of the caller's
+  * separator — the form the tree's literal pattern and join carried.
+  */
+object NgramUtil {
+  def wordGrams(text: UTF8String, sep: String, n: Int): ArrayData = {
+    val s = text.toString
+    // token t starts at starts(t) and ends sep.length before the next
+    // token's start; n separators give n+1 tokens, the last ending at
+    // the end of the text
+    val b = new scala.collection.mutable.ArrayBuilder.ofInt
+    b += 0
+    var at = s.indexOf(sep)
+    while (at >= 0) {
+      b += at + sep.length
+      at = s.indexOf(sep, at + sep.length)
+    }
+    val starts = b.result()
+    val nT = starts.length
+    def end(t: Int): Int = if (t + 1 < nT) starts(t + 1) - sep.length else s.length
+    val nG = if (nT >= n) nT - n + 1 else 0
+    val out = new Array[Any](nG)
+    var i = 0
+    while (i < nG) {
+      out(i) = UTF8String.fromString(s.substring(starts(i), end(i + n - 1)))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  def charGrams(text: UTF8String, n: Int): ArrayData = {
+    // the grams point into one private copy of the bytes (getBytes
+    // hands back the backing array itself when it is exactly sized)
+    val raw = text.getBytes
+    val bytes = if (raw eq text.getBaseObject) raw.clone() else raw
+    val nb = bytes.length
+    // offs(c) = byte offset of code point c; offs(nC) = end (clamped:
+    // a truncated final sequence ends at the last byte)
+    val offs = new Array[Int](nb + 1)
+    var nC = 0
+    var b = 0
+    while (b < nb) {
+      offs(nC) = b
+      nC += 1
+      b += UTF8String.numBytesForFirstByte(bytes(b))
+    }
+    offs(nC) = nb
+    val nG = if (nC >= n) nC - n + 1 else 0
+    val out = new Array[Any](nG)
+    var i = 0
+    while (i < nG) {
+      out(i) = UTF8String.fromBytes(bytes, offs(i), offs(i + n) - offs(i))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
+/** `NgramArray(text)` → `array<string>`: the word (`sep` non-empty) or
+  * character (`sep` empty) n-gram shingles of `text` — the dedup
+  * family's first stage as one native pass (see [[NgramUtil]] for the
+  * semantics contract). Null text yields null for word unigrams (the
+  * `split` result) and an empty array otherwise. `n` and `sep` are
+  * literal parameters of the operator, not data inputs.
+  */
+case class NgramArray(child: Expression, n: Int, sep: String)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(n >= 1, s"n-gram width must be >= 1, got $n")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = child.nullable && nullOnNull
+  override def prettyName: String = "ngram_array"
+
+  private def nullOnNull: Boolean = sep.nonEmpty && n == 1
+  // the separator as the tree's string literal carried it
+  @transient private lazy val sepRt: String = UTF8String.fromString(sep).toString
+
+  def grams(t: UTF8String): ArrayData =
+    if (t == null) { if (nullOnNull) null else new GenericArrayData(Array.empty[Any]) }
+    else if (sep.isEmpty) NgramUtil.charGrams(t, n)
+    else NgramUtil.wordGrams(t, sepRt, n)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    grams(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("ngramArray", this, classOf[NgramArray].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = $self.grams(${c.isNull} ? null : ${c.value});
+      boolean ${ev.isNull} = ${ev.value} == null;
+    """)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NgramArray =
+    copy(child = newChild)
+}
+
 object StringExpressions {
   import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -462,4 +583,7 @@ object StringExpressions {
   def normalizeForDedup(text: Column): Column =
     ExpressionUtils.column(
       NormalizeForDedup(ExpressionUtils.expression(text)))
+
+  def ngramArray(text: Column, n: Int, sep: String): Column =
+    ExpressionUtils.column(NgramArray(ExpressionUtils.expression(text), n, sep))
 }

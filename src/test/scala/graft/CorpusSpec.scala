@@ -99,6 +99,70 @@ class CorpusSpec extends AnyFunSuite {
       TextFunctions.normalizeForDedupTree(col("text")))
   }
 
+  /** Texts on the split/substr contract edges of the shingle kernels:
+    * null and empty text, fewer than n tokens, leading/trailing/repeated
+    * separators of every width tested, regex-special separator
+    * characters and non-BMP code points.
+    */
+  private val shingleEdges: Seq[String] = {
+    val clef = new String(Character.toChars(0x1D11E))
+    Seq(null, "", " ", "   ", "a", "a b", "a b c d e f g h i j k",
+      " lead", "trail ", "a  b   c ", "x.y..z.", ".a.b", "...",
+      "a|b||c|", "|", "|x|", "line1\nline2\n\nline4\n", "\n", "\n\n",
+      "a - b - c -  - d", " - ", "abab xabyab", "b\\Ea\\Q.c",
+      s"café naïve 中文 $clef end", "你好世界你好", s"$clef$clef${clef}ab$clef",
+      s"$clef $clef. $clef|x", "İstanbul UPPER", "one two three four five six seven eight")
+  }
+
+  test("NgramArray kernel == retired split/slice/substr tree on every sep and width") {
+    import graft.functions.TextFunctions
+    val seps = Seq(" ", ".", "|", "\n", " - ", "ab", "\\E", "")
+    // invalid UTF-8: an encoded surrogate, an overlong form, a code
+    // point past U+10FFFF — decoded to U+FFFD by split, windowed raw
+    // by substr
+    val invalid = Seq("61EDA08020622E7C", "C0AF2062202E63", "F490808020617C62")
+      .map(h => unhex(lit(h)).cast("string"))
+    val df = shingleEdges.toDF("t")
+      .unionByName(spark.range(invalid.length).select(
+        element_at(array(invalid: _*), col("id").cast("int") + 1).as("t")))
+    for (sep <- seps; n <- Seq(1, 2, 8)) {
+      // hex per gram: byte identity, not equality after decoding
+      def bytes(c: org.apache.spark.sql.Column) = transform(c, g => hex(g))
+      val rows = df.select(col("t"),
+          bytes(TextFunctions.ngramArray(col("t"), n, sep)).as("k"),
+          bytes(RetiredForms.ngramArrayTree(col("t"), n, sep)).as("e"))
+        .collect()
+      rows.foreach { r =>
+        assert(r.get(1) === r.get(2),
+          s"sep='${sep.replace("\n", "\\n")}' n=$n text='${r.get(0)}'")
+      }
+    }
+    // the real corpus, word and character grams
+    for ((n, sep) <- Seq((1, " "), (2, " "), (8, " "), (3, ""))) {
+      val bad = docs.filter(!(TextFunctions.ngramArray(col("text"), n, sep) <=>
+        RetiredForms.ngramArrayTree(col("text"), n, sep))).count()
+      assert(bad === 0L, s"corpus n=$n sep='$sep'")
+    }
+  }
+
+  test("MinHashFold signature == retired 64-lambda signature, xxhash64 and polyHash") {
+    val edges = shingleEdges.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    for (h <- Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+        xxhash64(_), graft.functions.PortableHash.polyHash(_));
+        (n, sep) <- Seq((1, " "), (2, " "), (8, " "), (3, ""));
+        frame <- Seq(edges, docs.select(col("doc_id"), col("text")))) {
+      def sigs(f: org.apache.spark.sql.DataFrame) = f.select(col("doc_id"), col("sig"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+      val kernel = sigs(Dedup.withMinHashSignature(frame, col("text"),
+        n = n, seed = 7L, baseHash = h, sep = sep))
+      val lambdas = sigs(RetiredForms.withMinHashSignatureLambdas(frame,
+        col("text"), n = n, seed = 7L, baseHash = h, sep = sep))
+      // null and empty texts included: k nulls on both sides
+      assert(kernel === lambdas, s"n=$n sep='$sep'")
+    }
+  }
+
   // ------------------------------------------------------------ snapshot
 
   test("corpusDiff: all four statuses, fingerprint-driven change detection") {

@@ -90,6 +90,62 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("minHashKeep with a duplicated id: each row claims, the id's verdict sums its rows") {
+    // ids must be unique per row; a duplicated id is NOT merged into
+    // one document (the pre-projection form unioned its shingles)
+    val same = "alpha beta gamma delta epsilon zeta"
+    val other = "one two three four five six seven"
+    val d = Seq(
+      (1L, 1L, same), (1L, 1L, same),    // id 1 twice, same text
+      (2L, 2L, same),                    // later copy of id 1's text
+      (4L, 0L, other),                   // earliest claimant of `other`
+      (3L, 3L, "lorem ipsum dolor sit amet consectetur"),
+      (3L, 3L, other)).toDF("id", "ord", "t") // id 3's second row
+    val out = Dedup.minHashKeep(d, col("id"), col("t"), ord = col("ord"),
+      bands = 16)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(out.keySet === Set(1L, 2L, 3L, 4L)) // one verdict per id
+    assert(out(1L) === ((0L, true)))   // both rows claim with (ord 1, id 1)
+    assert(out(2L) === ((16L, false)))
+    assert(out(4L) === ((0L, true)))
+    assert(out(3L) === ((16L, false))) // its first row keeps, its second loses all
+  }
+
+  test("minHashKeep plan: one signature fold per row, no shingle explode or aggregate or join") {
+    import org.apache.spark.sql.catalyst.expressions.{NamedExpression, PosExplode}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val keep = Dedup.minHashKeep(docs, col("doc_id"), col("text"),
+      ord = col("doc_id"))
+    keep.collect()
+    // the executed nodes; a reused exchange runs once, where it is defined
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val all = nodes(keep.queryExecution.executedPlan)
+    val folds = all.flatMap(_.expressions.flatMap(_.collect {
+      case f: org.apache.spark.sql.graft.MinHashFold => f }))
+    assert(folds.size === 1, all.mkString("\n"))
+    val gens = all.collect { case g: GenerateExec => g.generator }
+    // the band explode only
+    assert(gens.nonEmpty && gens.forall(_.isInstanceOf[PosExplode]))
+    // the claim is a window on (band, bucket); the verdict the one
+    // aggregation, on doc_id
+    val aggKeys = all.collect { case h: HashAggregateExec =>
+      h.groupingExpressions.map(_.name).toSet }
+    assert(aggKeys.toSet === Set(Set("doc_id")))
+    val windows = all.collect { case w: WindowExec =>
+      w.partitionSpec.map(_.asInstanceOf[NamedExpression].name).toSet }
+    assert(windows === Seq(Set("band", "bucket")))
+    assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]))
+  }
+
   test("minHashKeep claims buckets by ord and suppresses later near-dups") {
     val d = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),

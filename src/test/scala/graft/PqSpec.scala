@@ -55,6 +55,18 @@ class PqSpec extends AnyFunSuite {
     assert(codes(0)._2 !== codes(2)._2)
   }
 
+  test("fit reads array<double> vectors; same codebooks as the float corpus") {
+    val doubles = corpus.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
+    val m = Pq.fit(doubles, col("vec_id"), col("embedding"), dim = 4, m = 2,
+      ksub = 2, iters = 3)
+    assert(m.codebooks === fitModel().codebooks)
+    val codes = Pq.encode(doubles, col("embedding"), m)
+      .orderBy("vec_id").select("code0", "code1").collect().toSeq
+    assert(codes === Pq.encode(corpus, col("embedding"), m)
+      .orderBy("vec_id").select("code0", "code1").collect().toSeq)
+  }
+
   test("fit survives NaN components in the corpus (null-code rows dropped from the means)") {
     val dirty = corpus.union(Seq(
       (6L, Array(Float.NaN, 1f, Float.NaN, 3f)),
